@@ -35,11 +35,35 @@ from bench_scaling import data_proportional_partitions  # noqa: E402
 from bench_skew import QUERIES, _ensure_corpus, _session  # noqa: E402
 
 
-def build(input_dir: str, bits: int, cpus: int, P: int) -> str:
+def _indexed_docs(input_dir: str) -> int:
+    """Docs a build over ``input_dir`` indexes: build_index keeps only
+    ``lang == "en"`` rows (read from the lang column alone)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    lang = pq.read_table(input_dir, columns=["lang"]).column("lang")
+    return int(pc.sum(pc.equal(lang, "en")).as_py() or 0)
+
+
+def _is_fresh(idx: str, input_dir: str) -> bool:
+    """Reuse a cached index only if it committed in the current format and
+    holds exactly the docs the requested corpus yields."""
+    from statschat_ke_spark.index.build import INDEX_FORMAT
+
+    try:
+        with open(os.path.join(idx, "_SUCCESS.json")) as f:
+            marker = json.load(f)
+    except (OSError, ValueError):
+        return False
+    n_docs = (marker.get("stats") or {}).get("n_docs")
+    return marker.get("format") == INDEX_FORMAT and n_docs == _indexed_docs(input_dir)
+
+
+def build(input_dir: str, n_docs: int, bits: int, cpus: int, P: int) -> str:
     from statschat_ke_spark.index.build import build_index
 
-    idx = os.path.join(tempfile.gettempdir(), f"statschat_skewq_idx_{bits}")
-    if os.path.exists(os.path.join(idx, "_SUCCESS.json")):
+    idx = os.path.join(tempfile.gettempdir(), f"statschat_skewq_idx_{n_docs}_{bits}")
+    if _is_fresh(idx, input_dir):
         return idx
     shutil.rmtree(idx, ignore_errors=True)
     spark = _session(cpus)
@@ -67,7 +91,7 @@ def main() -> None:
     bits = [int(b) for b in args.bits.split(",")]
     input_dir = _ensure_corpus(args.n_docs)
     P = data_proportional_partitions(input_dir)
-    idxs = {b: build(input_dir, b, args.cpus, P) for b in bits}
+    idxs = {b: build(input_dir, args.n_docs, b, args.cpus, P) for b in bits}
 
     from statschat_ke_spark.index.query import topk_batch
 

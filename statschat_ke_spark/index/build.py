@@ -61,9 +61,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from statschat_ke_spark.functions.extract import extract_text_udf
 from statschat_ke_spark.index.codec import BLOCK, vbyte_encode_chunks
+from statschat_ke_spark.index.query import B, K1, LONG_MIN
 
-K1 = 1.2
-B = 0.75
 # FLOOR for the per-segment doc-range slice count (2^SLICE_BITS slices).
 # The actual slice_bits of a segment is derived from its own doc count at
 # build time (derive_slice_bits below) so a web-scale build never ships the
@@ -99,7 +98,6 @@ def derive_slice_bits(n_docs: int, *, target: int = DOCS_PER_SLICE_TARGET) -> in
 # Bump when the on-disk postings/lexicon layout changes; recorded in
 # _SUCCESS.json so stale caches rebuild instead of misreading.
 INDEX_FORMAT = 2
-LONG_MIN = -(2**63)
 # Arrow batch rows for the pack stage. Pack input rows are 28 fixed-width
 # bytes, so 128k rows ≈ 3.6 MB per batch; the 10k default caused a
 # batch-ping-pong collapse under high task concurrency (measured 12× slower

@@ -14,17 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from statschat_ke_spark.functions.refops import time_decay
-
-LONG_MIN = -(2**63)
-
-
-def doc_u_asc() -> Column:
-    """Canonical score-tie order: doc_id ascending UNSIGNED — the engine-wide
-    tie-break (index/query.py topk, the numpy oracle, api.py). doc_id =
-    xxhash64(url) is ~half negative, so a signed F.asc("doc_id") would
-    invert tie order vs topk's on real ids (harmless only on synthetic
-    non-negative ids)."""
-    return F.col("doc_id").bitwiseXOR(F.lit(LONG_MIN)).asc()
+from statschat_ke_spark.index.query import doc_u_asc
 
 
 def score_threshold(results: DataFrame, min_score: float) -> Column | DataFrame:

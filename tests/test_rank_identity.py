@@ -2,8 +2,8 @@
 
 Mirrors the reference's golden-question evaluation
 (/root/reference/statschat/model_evaluation/evaluation.py:250-326) with
-exact assertions: identical doc_id sequences, scores to 1e-9, both for the
-exhaustive scorer and for block-max WAND.
+exact assertions: identical doc_id sequences, scores to 1e-9, for the one
+query path (block-max WAND) that ``topk`` and ``topk_batch`` share.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 
 from statschat_ke_spark.index.oracle import OracleIndex
-from statschat_ke_spark.index.query import topk
+from statschat_ke_spark.index.query import topk, topk_batch
 
 
 @pytest.fixture(scope="module")
@@ -20,17 +20,35 @@ def oracle(corpus_pdf):
     return OracleIndex(corpus_pdf)
 
 
-@pytest.mark.parametrize("mode", ["exhaustive", "wand"])
-def test_rank_identity_all_queries(spark, index_dir, oracle, queries, mode):
+def _assert_bits_equal(a, b, what):
+    """Same doc_ids and BIT-identical scores (not allclose)."""
+    assert list(a.doc_id) == list(b.doc_id), what
+    assert (
+        a.score.to_numpy().view(np.int64) == b.score.to_numpy().view(np.int64)
+    ).all(), what
+
+
+def _single_batch(spark, index_dir, q, k):
+    return topk_batch(spark, index_dir, {0: q}, k=k).toPandas()
+
+
+def test_rank_identity_all_queries(spark, index_dir, oracle, queries):
     for q in queries.itertuples(index=False):
         golden = oracle.topk(q.query_text, int(q.k))
-        got = topk(spark, index_dir, q.query_text, int(q.k), mode=mode).toPandas()
-        assert len(got) == len(golden), (q.query_id, mode)
-        assert (got.doc_id.to_numpy() == golden.doc_id.to_numpy()).all(), (
-            q.query_id,
-            mode,
-        )
+        got = topk(spark, index_dir, q.query_text, int(q.k)).toPandas()
+        assert len(got) == len(golden), q.query_id
+        assert (got.doc_id.to_numpy() == golden.doc_id.to_numpy()).all(), q.query_id
         assert np.allclose(got.score.to_numpy(), golden.score.to_numpy(), atol=1e-9)
+
+
+def test_topk_equals_single_query_batch_bitwise(spark, index_dir, queries):
+    """``topk`` is ``topk_batch``'s plan for one query: for every fixture
+    query, plus an empty and an all-miss query, the two entry points return
+    the same doc_ids with bit-identical scores."""
+    texts = [q.query_text for q in queries.itertuples(index=False)]
+    for q in texts + ["", "?!... ---", "xqzvk nonexistenttermxyz"]:
+        got = topk(spark, index_dir, q, 10).toPandas()
+        _assert_bits_equal(got, _single_batch(spark, index_dir, q, 10), q)
 
 
 def test_negative_query_empty(spark, index_dir):
@@ -50,8 +68,6 @@ def test_with_url(spark, index_dir, oracle):
 def test_topk_batch_matches_per_query(spark, index_dir, queries):
     """topk_batch (one job, union pushdown, per-slice multi-query WAND) is
     row-identical to per-query topk for the whole golden set."""
-    from statschat_ke_spark.index.query import topk_batch
-
     qmap = {int(q.query_id): q.query_text for q in queries.itertuples(index=False)}
     k = 10
     batch = topk_batch(spark, index_dir, qmap, k=k).toPandas()
@@ -68,29 +84,28 @@ def test_wand_exact_tie_at_rank_k(spark, index_dir, oracle):
     """Regression: an exact score tie AT the kth slot must resolve by the
     unsigned-doc_id tie-break in WAND too. The interval upper bounds come
     out of a float sweep+cumsum whose rounding once pushed the tied doc's
-    interval a few ulp below θ, so WAND skipped it while exhaustive kept it
-    (query.py _wand_slice eps margin). This query has two docs bit-equal at
-    rank 10 on the 1k corpus."""
+    interval a few ulp below θ, so WAND skipped it while the oracle kept it
+    (query.py _wand_terms_topk eps margin). This query has two docs
+    bit-equal at rank 10 on the 1k corpus."""
     q = "w09207 w02260 reports"
     golden = oracle.topk(q, 10)
-    for mode in ("wand", "exhaustive"):
-        got = topk(spark, index_dir, q, 10, mode=mode).toPandas()
-        assert list(got.doc_id) == list(golden.doc_id), mode
+    got = topk(spark, index_dir, q, 10).toPandas()
+    assert list(got.doc_id) == list(golden.doc_id)
+    _assert_bits_equal(got, _single_batch(spark, index_dir, q, 10), q)
     # the tie is real: ranks 10 and 11 carry bit-identical scores
     g11 = oracle.topk(q, 11)
     assert g11.score.iloc[9] == g11.score.iloc[10]
 
 
-def test_scores_bit_identical_across_groupings(spark, index_dir):
+def test_scores_bit_identical_across_groupings(spark, index_dir, oracle):
     """Emitted scores are a pure function of (index, query): BIT-identical
-    across WAND slice-group counts and vs the exhaustive scorer. Per-doc
-    partials are summed in canonical query-term order (query.py _wand_slice
-    'Bit-reproducibility'); without that pin, the essential/non-essential
-    split order varies with grouping and near-tied docs swap ranks by one
-    ulp — caught by exactly such a swap on an all-common query at a pinned
-    group count, reproduced here."""
-    from statschat_ke_spark.index.query import topk_batch
-
+    across WAND slice-group counts and between topk and topk_batch, and
+    rank-identical to the oracle. Per-doc partials are summed in canonical
+    query-term order (query.py _wand_terms_topk 'Bit-reproducibility');
+    without that pin, the essential/non-essential split order varies with
+    grouping and near-tied docs swap ranks by one ulp — caught by exactly
+    such a swap on an all-common query at a pinned group count, reproduced
+    here."""
     queries = {
         0: "and on have reports",  # all-common: many near-tied docs
         1: "w09207 w02260 reports",  # exact tie at rank 10 (see above)
@@ -114,13 +129,11 @@ def test_scores_bit_identical_across_groupings(spark, index_dir):
                 == baseline.score.to_numpy().view(np.int64)
             ).all(), ng
     for qid, qtext in queries.items():
-        ex = topk(spark, index_dir, qtext, 10, mode="exhaustive").toPandas()
-        sub = baseline[baseline.query_id == qid]
-        assert list(ex.doc_id) == list(sub.doc_id), qid
-        assert (
-            ex.score.to_numpy().view(np.int64)
-            == sub.score.to_numpy().view(np.int64)
-        ).all(), qid
+        sub = baseline[baseline.query_id == qid].reset_index(drop=True)
+        golden = oracle.topk(qtext, 10)
+        assert list(sub.doc_id) == list(golden.doc_id), qid
+        assert np.allclose(sub.score.to_numpy(), golden.score.to_numpy(), atol=1e-9)
+        _assert_bits_equal(topk(spark, index_dir, qtext, 10).toPandas(), sub, qid)
 
 
 def test_topk_batch_rank_identity_golden_scale(spark, index_dir, oracle, corpus_pdf):
@@ -129,7 +142,6 @@ def test_topk_batch_rank_identity_golden_scale(spark, index_dir, oracle, corpus_
     the query-bucket postings-replication join (query.py term_buckets) that
     the 3-query contract entry never pushes past one bucket."""
     from statschat_ke_spark.functions.tokenize import tokenize
-    from statschat_ke_spark.index.query import topk_batch
 
     # vocabulary drawn from the corpus itself, split by document frequency
     from collections import Counter
@@ -175,36 +187,6 @@ def test_topk_batch_rank_identity_golden_scale(spark, index_dir, oracle, corpus_
     # sanity: the mix actually produced hits and misses
     assert n_nonempty >= 150
     assert n_nonempty < len(qmap)
-
-
-def test_auto_mode_threshold_derivation_and_identity(spark, index_dir, oracle):
-    """auto mode: the crossover is derived from corpus size (not a magic
-    constant), the resolved mode is observable, and results are
-    rank-identical on both sides of the threshold."""
-    from statschat_ke_spark.index.query import (
-        LAST_QUERY_INFO,
-        auto_mode_threshold,
-        load_stats,
-        topk,
-    )
-
-    q = "what was inflation in december 2023"
-    golden = oracle.topk(q, 10)
-
-    # default: threshold comes from n_docs
-    got = topk(spark, index_dir, q, 10).toPandas()
-    stats = load_stats(index_dir)
-    assert LAST_QUERY_INFO["threshold"] == auto_mode_threshold(int(stats["n_docs"]))
-    assert LAST_QUERY_INFO["mode"] in ("exhaustive", "wand")
-    total_df = LAST_QUERY_INFO["total_df"]
-    assert list(got.doc_id) == list(golden.doc_id)
-
-    # force each side of the crossover around THIS query's Σdf
-    for thr, want in [(total_df + 1, "exhaustive"), (total_df, "wand")]:
-        got = topk(spark, index_dir, q, 10, auto_threshold=thr).toPandas()
-        assert LAST_QUERY_INFO["mode"] == want, (thr, LAST_QUERY_INFO)
-        assert list(got.doc_id) == list(golden.doc_id), want
-        assert np.allclose(got.score.to_numpy(), golden.score.to_numpy(), atol=1e-9)
 
 
 def test_term_blocks_budget_cap(spark, index_dir, queries):
@@ -277,12 +259,11 @@ def test_scores_bit_identical_across_slice_bits(spark, corpus_df, index_dir,
     SAME corpus at coarser and finer slice_bits must leave every query's
     doc_ids AND score bits unchanged (scores are per-doc sums over the
     query's terms — slices only re-cut posting blocks; the canonical-order
-    fold in _wand_slice keeps the summation order pinned regardless)."""
+    fold in _wand_terms_topk keeps the summation order pinned regardless)."""
     import json
     import os
 
     from statschat_ke_spark.index.build import build_index
-    from statschat_ke_spark.index.query import topk_batch
 
     queries = {
         0: "and on have reports",
@@ -321,29 +302,3 @@ def test_scores_bit_identical_across_slice_bits(spark, corpus_df, index_dir,
             got.score.to_numpy().view(np.int64)
             == baseline.score.to_numpy().view(np.int64)
         ).all(), sb
-
-
-def test_auto_mode_threshold_regimes():
-    """Round-5 re-derivation: below the stage-overhead boundary the 270k
-    crossover (8×n_docs) holds; above it, only the tiny-volume floor routes
-    to exhaustive, because WAND measured faster on every query shape at
-    900k and 3.24M docs (BENCH_LARGE_1M / BENCH_LARGE_3M6)."""
-    from statschat_ke_spark.index.build import BLOCK
-    from statschat_ke_spark.index.query import (
-        STAGE_OVERHEAD_DOCS,
-        auto_mode_threshold,
-    )
-
-    floor = 64 * BLOCK
-    # small-corpus regime: proportional rule, floored
-    assert auto_mode_threshold(1_000) == floor
-    assert auto_mode_threshold(270_000) == 8 * 270_000
-    # large-corpus regime: threshold collapses to the floor, so a standard
-    # 4-term query (Σdf ≈ 3×n_docs) and a selective rare+common query
-    # (Σdf ≈ 0.9×n_docs) BOTH route to wand — the measured-faster mode
-    for n in (900_000, 3_240_000, 10**9):
-        thr = auto_mode_threshold(n)
-        assert thr == floor
-        assert 3 * n > thr and int(0.9 * n) > thr
-    # the boundary sits strictly between the two measured corpora
-    assert 270_000 < STAGE_OVERHEAD_DOCS <= 900_000

@@ -1,7 +1,8 @@
-"""WAND == exhaustive on random posting sets (SURVEY.md §5.2-3).
+"""WAND == brute force on random posting sets (SURVEY.md §5.2-3).
 
-Unit-tests the per-slice block-max WAND function directly (no Spark session)
-against brute-force scoring, including adversarial tie cases.
+Unit-tests the engine's per-group block-max WAND scoring function directly
+(no Spark session) against brute-force scoring, including adversarial tie
+cases.
 """
 
 from __future__ import annotations
@@ -17,7 +18,12 @@ from statschat_ke_spark.index.codec import (
     encode_tfs,
     vbyte_encode,
 )
-from statschat_ke_spark.index.query import K1, B, _wand_slice
+from statschat_ke_spark.index.query import K1, B, _wand_groups
+
+
+def _wand(idf_map, avgdl, k, pdf):
+    """One query through the scoring UDF, on one (seg, wg, qb) group."""
+    return _wand_groups({0: idf_map}, avgdl, k)((0, 0, 0), pdf)
 
 
 def _build_slice_pdf(term_postings: dict[int, list[tuple[int, int, int]]], avgdl: float):
@@ -82,7 +88,7 @@ def test_wand_matches_bruteforce_random():
             term_postings[1000 + t] = plist
         pdf, idf_map = _build_slice_pdf(term_postings, avgdl)
         for k in (1, 5, 20):
-            got = _wand_slice(idf_map, avgdl, k)(pdf)
+            got = _wand(idf_map, avgdl, k, pdf)
             want = _brute_force(term_postings, idf_map, avgdl, k)
             got_ids = got.doc_id.to_numpy().view(np.uint64).tolist()
             assert got_ids == [d for d, _ in want], f"trial={trial} k={k}"
@@ -97,6 +103,6 @@ def test_wand_exact_ties():
     plist = [(d, 3, 100) for d in [10, 5, 99, 42, 7]]
     term_postings = {1: plist, 2: [(d, 1, 100) for d, _, _ in plist]}
     pdf, idf_map = _build_slice_pdf(term_postings, avgdl)
-    got = _wand_slice(idf_map, avgdl, 3)(pdf)
+    got = _wand(idf_map, avgdl, 3, pdf)
     want = _brute_force(term_postings, idf_map, avgdl, 3)
     assert got.doc_id.to_numpy().view(np.uint64).tolist() == [d for d, _ in want]
