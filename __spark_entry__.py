@@ -468,10 +468,8 @@ def _ensure_index_streamed(spark: SparkSession, sf_dir: str) -> str:
             docs.filter(F.col("doc_id") % 3 == wave).write.mode(
                 "append"
             ).parquet(land)
-            res = ingest_stream(
-                spark, land, idx, schema=docs_schema, strategy="segment"
-            )
-            assert res is not None and res.complete
+            res = ingest_stream(spark, land, idx, schema=docs_schema)
+            assert res.complete
 
     return _ensure_cached_index(
         spark,

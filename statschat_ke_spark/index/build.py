@@ -443,11 +443,15 @@ class _writer_lock:
     lock, and two phase-B writers proceed). A lock whose pid is dead
     (crashed writer) is broken and retaken; losing the retake race to
     another breaker raises WriterConflict rather than corrupting.
-    Reentrant per (thread, index_dir) so update_index → append_segment →
-    maybe_compact nest under one hold; a SECOND THREAD of the same process
-    is a conflict, not a reentry (the pid file can't arbitrate in-process
-    writers — the threaded WSGI server + background-ingest topology needs
-    the map-based check)."""
+    Held by merge_index, append_segment, delete_docs and the shared commit
+    step ``_commit`` (which ends build_index, update_index and
+    ingest_stream); update_index takes it before picking its chunk id, so
+    its staging and commit are one hold. Phase-A staging of build_index and
+    ingest_stream runs unlocked (their chunk ids are fixed or per-epoch).
+    Reentrant per (thread, index_dir) so the nested units share the outer
+    hold; a SECOND THREAD of the same process is a conflict, not a reentry
+    (the pid file can't arbitrate in-process writers — the threaded WSGI
+    server + background-ingest topology needs the map-based check)."""
 
     _guard = threading.Lock()
     _held: dict = {}  # index_dir -> owning thread ident, THIS process
@@ -616,8 +620,6 @@ def build_index(
     checkpoint-resume path.
     """
     t0 = time.time()
-    sc = spark.sparkContext
-    P = num_partitions or sc.defaultParallelism
     os.makedirs(index_dir, exist_ok=True)
 
     by_files = isinstance(docs, str) and n_chunks > 1
@@ -674,15 +676,11 @@ def build_index(
         _stage_chunk(spark, cdf, index_dir, chunk, n_files=n_files)
         processed += 1
 
-    result = merge_index(
-        spark, index_dir, num_partitions=P, n_chunks=n_chunks,
+    return _commit(
+        spark, index_dir, t0=t0, staged_before=done_chunks, compact=True,
+        num_partitions=num_partitions, n_chunks=n_chunks,
         slice_bits=slice_bits,
     )
-    result.chunks_processed = processed
-    result.chunks_skipped = len(done_chunks)
-    result.wall_s = time.time() - t0
-    _finalize_stats(index_dir, result.wall_s)
-    return result
 
 
 def update_index(
@@ -723,72 +721,95 @@ def update_index(
     (see maybe_compact). The result's ``compacted`` flag reports it.
     """
     if strategy not in ("segment", "compact"):
-        # same up-front validation as ingest_stream: a typo'd strategy must
-        # not silently take the fresh-dir compaction path
+        # validate BEFORE any work: a typo'd strategy must not silently take
+        # the fresh-dir compaction path
         raise ValueError(f"unknown strategy {strategy!r}")
     t0 = time.time()
-    P = num_partitions or spark.sparkContext.defaultParallelism
     base = _prepare_base(new_docs, lang)
     # NOTE: the committed _SUCCESS.json stays valid throughout staging and
     # segment append — readers prune scans to the marker's segment list, so
     # the in-flight chunk/segment is invisible and queries keep serving the
-    # old snapshot (same reader story as ingest_stream). Only table-rewriting
-    # paths (merge_index, reached via strategy='compact' or maybe_compact)
-    # invalidate the marker, immediately before clearing the table dirs.
-    existing_path = os.path.join(index_dir, "staged")
-    if os.path.exists(existing_path):
-        existing = spark.read.parquet(existing_path).select("url")
-        base = base.join(existing, "url", "left_anti")
-    done = staged_chunks(spark, index_dir)
-    next_chunk = (max(done) + 1) if done else 0
-    _stage_chunk(spark, base, index_dir, next_chunk)
+    # old snapshot. Only table-rewriting paths (merge_index, reached via
+    # strategy='compact' or maybe_compact) invalidate the marker,
+    # immediately before clearing the table dirs.
+    os.makedirs(index_dir, exist_ok=True)
+    # one hold from picking the chunk id through the commit: two concurrent
+    # updates must not pick the same id and overwrite each other's staging
+    with _writer_lock(index_dir):
+        existing_path = os.path.join(index_dir, "staged")
+        if os.path.exists(existing_path):
+            existing = spark.read.parquet(existing_path).select("url")
+            base = base.join(existing, "url", "left_anti")
+        done = staged_chunks(spark, index_dir)
+        next_chunk = (max(done) + 1) if done else 0
+        _stage_chunk(spark, base, index_dir, next_chunk)
+        return _commit(
+            spark, index_dir, t0=t0, staged_before=done,
+            compact=strategy == "compact", num_partitions=num_partitions,
+            n_chunks=next_chunk + 1, slice_bits=slice_bits,
+            max_segments=max_segments,
+        )
 
-    # no prior completed merge (fresh dir) → the delta IS the whole index;
-    # compaction and segment-append coincide, take the compaction path
-    has_base = os.path.exists(os.path.join(index_dir, "stats.json"))
-    if strategy == "compact" or not has_base:
+
+@_single_writer
+def _commit(
+    spark: SparkSession,
+    index_dir: str,
+    *,
+    t0: float,
+    staged_before: set[int],
+    compact: bool,
+    num_partitions: int | None = None,
+    n_chunks: int | None = None,
+    slice_bits: int | None = None,
+    max_segments: int | None = DEFAULT_MAX_SEGMENTS,
+) -> BuildResult:
+    """Phase B of every write entry point (build_index, update_index,
+    ingest_stream), under one writer-lock hold:
+
+    - ``compact`` or no committed stats.json (a fresh dir: the staged chunks
+      ARE the whole index) → merge_index over all staged chunks, then
+      _finalize_stats so the stats cover phase A + phase B;
+    - otherwise append every pending chunk (staged minus covered) as its own
+      segment, then apply the segment-lifecycle policy (maybe_compact).
+      Reconciling ALL pending chunks, not only the one just staged, packs an
+      orphan left by a crash between _stage_chunk and append_segment.
+
+    Chunk accounting: ``chunks_processed`` is the chunks this call brought
+    in — those its phase A staged (merge) or the pending chunks it packed
+    (append); ``chunks_skipped`` is every other staged chunk.
+
+    merge_index and append_segment are looked up as module globals at call
+    time, so wrappers installed on this module (tracing) see every commit."""
+    staged = staged_chunks(spark, index_dir)
+    stats_path = os.path.join(index_dir, "stats.json")
+    if compact or not os.path.exists(stats_path):
         result = merge_index(
-            spark, index_dir, num_partitions=P, n_chunks=next_chunk + 1,
+            spark, index_dir, num_partitions=num_partitions, n_chunks=n_chunks,
             slice_bits=slice_bits,
         )
-        result.chunks_processed = 1
-        result.chunks_skipped = len(done)
+        processed = staged - staged_before
         result.wall_s = time.time() - t0
         _finalize_stats(index_dir, result.wall_s)
-        return result
-
-    # Reconcile ALL pending chunks (staged minus covered), not only the one
-    # just staged: if a prior update crashed between _stage_chunk committing
-    # lineage and append_segment finishing, a retry of the same batch
-    # anti-joins everything away and stages an EMPTY next chunk — appending
-    # only next_chunk would then mark the index complete with the earlier
-    # orphan chunk silently unpacked. Same reconciliation as ingest_stream.
-    pending = sorted(
-        staged_chunks(spark, index_dir) - covered_chunks(index_dir)
-    )
-    appended = list(pending)
-    result = None
-    for c in pending:
-        result = append_segment(
-            spark, index_dir, c, num_partitions=P, slice_bits=slice_bits
+    else:
+        with open(stats_path) as f:
+            old = json.load(f)
+        # covered_chunks: the staged chunks the current segments contain
+        processed = staged - set(old.get("covered_chunks", []))
+        result = None
+        for c in sorted(processed):
+            result = append_segment(
+                spark, index_dir, c, num_partitions=num_partitions,
+                slice_bits=slice_bits,
+            )
+        compacted = maybe_compact(
+            spark, index_dir, max_segments=max_segments,
+            num_partitions=num_partitions,
         )
-    if result is None:  # fully covered already (pure replay)
-        result = append_segment(
-            spark, index_dir, next_chunk, num_partitions=P,
-            slice_bits=slice_bits,
-        )
-        appended = [next_chunk]
-    compacted = maybe_compact(
-        spark, index_dir, max_segments=max_segments, num_partitions=P
-    )
-    if compacted is not None:
-        result = compacted
-    # processed = chunks this call actually packed into a segment;
-    # skipped = previously-staged chunks NOT (re)packed now — disjoint by
-    # construction, so a reconciled orphan counts once, as processed.
-    result.chunks_processed = len(appended)
-    result.chunks_skipped = len(set(done) - set(appended))
-    result.wall_s = time.time() - t0
+        result = compacted or result or _result_from_stats(index_dir, t0, old)
+        result.wall_s = time.time() - t0
+    result.chunks_processed = len(processed)
+    result.chunks_skipped = len(staged - processed)
     return result
 
 
@@ -920,10 +941,10 @@ def delete_docs(
 
     Scope: only docs in the COMMITTED snapshot (staged chunks listed in
     stats.json's covered_chunks) are deletable — a url sitting in a
-    staged-but-unmerged chunk (``ingest_stream(merge=False)``, or the window
-    between _stage_chunk and append_segment) was never added to the
-    committed stats, so subtracting it would corrupt n_docs/idf for the live
-    corpus. Delete it after its chunk commits.
+    staged-but-uncommitted chunk (a crash between _stage_chunk and the
+    commit, or a build cut short by ``stop_after_chunks``) was never added
+    to the committed stats, so subtracting it would corrupt n_docs/idf for
+    the live corpus. Delete it after its chunk commits.
 
     Crash safety: the stats/_SUCCESS rename is the commit point. The delta
     segment is written to a fresh reserved id first (never in any marker
@@ -1098,8 +1119,8 @@ def append_segment(
     slice_bits: int | None = None,
 ) -> BuildResult:
     """Pack ALREADY-STAGED chunk N into index segment N and merge the global
-    stats incrementally — the delta-proportional phase-B unit shared by
-    ``update_index(strategy='segment')`` and the streaming drain. Requires a
+    stats incrementally — the delta-proportional phase-B unit of the shared
+    commit step (``_commit``) behind update_index and ingest_stream. Requires a
     completed prior merge (stats.json); idempotent: an already-appended or
     empty chunk just refreshes the success marker."""
     t0 = time.time()
@@ -1114,16 +1135,7 @@ def append_segment(
             index_dir, old, n_chunks, _committed_segments(index_dir, old),
             old.get("covered_chunks", []),
         )
-        return BuildResult(
-            index_dir=index_dir,
-            n_docs=int(old["n_docs"]),
-            avgdl=float(old["avgdl"]),
-            n_terms=int(old["n_terms"]),
-            n_posting_rows=int(old.get("n_posting_rows", 0)),
-            wall_s=time.time() - t0,
-            chunks_processed=0,
-            chunks_skipped=0,
-        )
+        return _result_from_stats(index_dir, t0, old)
 
     if chunk in set(old.get("covered_chunks", [])):
         return _unchanged()  # replayed drain / already-compacted chunk
@@ -1194,6 +1206,21 @@ def append_segment(
         n_posting_rows=stats["n_posting_rows"],
         wall_s=wall,
         chunks_processed=1,
+        chunks_skipped=0,
+    )
+
+
+def _result_from_stats(index_dir: str, t0: float, stats: dict) -> BuildResult:
+    """The committed index (its ``stats``) as the result of a call that
+    packed nothing."""
+    return BuildResult(
+        index_dir=index_dir,
+        n_docs=int(stats["n_docs"]),
+        avgdl=float(stats["avgdl"]),
+        n_terms=int(stats["n_terms"]),
+        n_posting_rows=int(stats.get("n_posting_rows", 0)),
+        wall_s=time.time() - t0,
+        chunks_processed=0,
         chunks_skipped=0,
     )
 
@@ -1458,20 +1485,6 @@ def _atomic_json(path: str, obj, *, indent=None) -> None:
     os.replace(tmp, path)
 
 
-def covered_chunks(index_dir: str) -> set[int]:
-    """Staged chunks already folded into index segments. Read from
-    stats.json (read by writers; independent of the _SUCCESS marker,
-    which only describes the committed reader snapshot)."""
-    p = os.path.join(index_dir, "stats.json")
-    if not os.path.exists(p):
-        return set()
-    try:
-        with open(p) as f:
-            return set(json.load(f).get("covered_chunks", []))
-    except Exception:
-        return set()
-
-
 @_single_writer
 def merge_index(
     spark: SparkSession,
@@ -1493,14 +1506,14 @@ def merge_index(
     # rebuilt segment (posting bytes shrink), but the tombstone files carry
     # forward — the immutable staged chunks still hold the deleted rows, so
     # every future rebuild must keep filtering (see delete_docs)
+    # A missing stats.json is a fresh dir; an unreadable one must fail: the
+    # tombstone list lives only there, and compacting without it would
+    # re-admit every deleted doc for good.
     tomb_files: list[str] = []
     old_stats_path = os.path.join(index_dir, "stats.json")
     if os.path.exists(old_stats_path):
-        try:
-            with open(old_stats_path) as f:
-                tomb_files = list(json.load(f).get("tombstone_files", []))
-        except (OSError, ValueError):
-            tomb_files = []
+        with open(old_stats_path) as f:
+            tomb_files = list(json.load(f).get("tombstone_files", []))
     if tomb_files:
         tomb = _tombstone_df(spark, index_dir, {"tombstone_files": tomb_files})
         staged = staged.join(F.broadcast(tomb), "doc_id", "left_anti")

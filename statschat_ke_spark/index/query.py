@@ -82,10 +82,11 @@ def check_index_format(index_dir: str, marker: dict | None = None) -> dict:
 
     Three distinct failure shapes, all otherwise confusing at query time:
     an ABSENT ``_SUCCESS.json`` means the last build/append never committed
-    (crash mid-build, or an ``ingest_stream(merge=False)`` drain awaiting its
-    merge) — tables may be partially written; a TORN/CORRUPT marker (invalid
-    JSON — e.g. written by a pre-atomic-rename engine on a crash) is reported
-    the same way rather than escaping as a raw JSONDecodeError; a
+    (crash mid-build, a build cut short by ``stop_after_chunks``, or a
+    compaction rewriting the tables) — tables may be partially written; a
+    TORN/CORRUPT marker (invalid JSON — e.g. written by a pre-atomic-rename
+    engine on a crash) is reported the same way rather than escaping as a
+    raw JSONDecodeError; a
     format-version MISMATCH means the posting/block layout on disk is not
     what this decoder assumes (e.g. a v1 index's baked tf-normalized block
     bounds would make v2's avgdl-free WAND pruning silently unsafe rather
@@ -103,8 +104,8 @@ def check_index_format(index_dir: str, marker: dict | None = None) -> dict:
         raise RuntimeError(
             f"index at {index_dir!r} has no _SUCCESS.json commit marker "
             "(absent or torn) — the build was interrupted before commit or "
-            "a streaming drain ran with merge=False; finish the build "
-            "(merge_index / append_segment) before querying"
+            "a compaction is rewriting the tables; finish the build "
+            "(build_index(resume=True) / merge_index) before querying"
         )
     fmt = marker.get("format")
     if fmt != INDEX_FORMAT:

@@ -13,8 +13,10 @@ implements that mapping:
   epoch id) and stage with overwrite, making batch REPLAY after a crash
   idempotent (the streaming checkpoint gives at-least-once foreachBatch;
   overwrite-by-epoch upgrades it to effectively-once staging)
-- after the AvailableNow drain, phase B (merge_index) rebuilds
-  lexicon/postings from all staged chunks — batch and stream chunks alike
+- after the AvailableNow drain, the same phase-B commit step as
+  build_index/update_index runs: a fresh dir is merged into seg=0, otherwise
+  every pending chunk is appended as its own segment and the
+  segment-lifecycle compaction applies
 
 At web scale the same topology runs with a real trigger interval and an
 Iceberg ``MERGE INTO`` in place of the directory swap; the landing-zone
@@ -24,6 +26,7 @@ pattern, checkpoint dir, and epoch-idempotent staging carry over unchanged.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,12 +34,9 @@ from statschat_ke_spark.corpus import CONTRACT_SCHEMA
 from statschat_ke_spark.index.build import (
     DEFAULT_MAX_SEGMENTS,
     BuildResult,
+    _commit,
     _prepare_base,
     _stage_chunk,
-    append_segment,
-    covered_chunks,
-    maybe_compact,
-    merge_index,
     staged_chunks,
 )
 
@@ -51,34 +51,21 @@ def ingest_stream(
     lang: str | None = "en",
     num_partitions: int | None = None,
     schema: str = CONTRACT_SCHEMA,
-    max_files_per_trigger: int | None = None,
-    merge: bool = True,
-    strategy: str = "segment",
     max_segments: int | None = DEFAULT_MAX_SEGMENTS,
-) -> BuildResult | None:
+) -> BuildResult:
     """Drain the landing zone into the index with Trigger.AvailableNow.
 
-    Returns the merge result (or None with ``merge=False`` when several
-    drains are batched before one merge). Repeated invocation picks up only
-    files not yet recorded in the stream checkpoint — the streaming analog of
-    update_index's anti-join.
-
-    ``strategy='segment'`` (default): every drained micro-batch chunk is
-    appended as its own doc-disjoint index segment (``append_segment``), so
-    continuous ingest cost stays ∝ new data — the shape a real trigger
-    interval needs. Falls back to full compaction when no completed merge
-    exists yet. ``strategy='compact'``: full phase-B re-merge per drain.
-    """
-    if strategy not in ("segment", "compact"):
-        # validate BEFORE any work: an unknown strategy must fail on the
-        # first call, not silently compact on a fresh dir (or never validate
-        # at all under merge=False) and only blow up on the second drain
-        raise ValueError(f"unknown strategy {strategy!r}")
+    Repeated invocation picks up only files not yet recorded in the stream
+    checkpoint — the streaming analog of update_index's anti-join. Every
+    drained micro-batch chunk is appended as its own doc-disjoint index
+    segment, so continuous ingest cost stays ∝ new data — the shape a real
+    trigger interval needs; the first drain into a fresh dir is merged into
+    seg=0. Past ``max_segments`` the index is folded back to one segment
+    (see update_index)."""
+    t0 = time.time()
     os.makedirs(index_dir, exist_ok=True)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(landing_dir)
+    staged_before = staged_chunks(spark, index_dir)
+    stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def stage_batch(batch_df: DataFrame, epoch_id: int) -> None:
         base = _prepare_base(batch_df, lang)
@@ -93,37 +80,7 @@ def ingest_stream(
         .start()
     )
     q.awaitTermination()
-
-    if not merge:
-        return None
-    has_base = os.path.exists(os.path.join(index_dir, "stats.json"))
-    if strategy == "compact" or not has_base:
-        return merge_index(spark, index_dir, num_partitions=num_partitions)
-    staged = staged_chunks(spark, index_dir)
-    pending = sorted(staged - covered_chunks(index_dir))
-    if not pending:
-        # nothing new landed: report the unchanged index
-        import json
-
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            s = json.load(f)
-        return BuildResult(
-            index_dir=index_dir,
-            n_docs=int(s["n_docs"]),
-            avgdl=float(s["avgdl"]),
-            n_terms=int(s["n_terms"]),
-            n_posting_rows=int(s.get("n_posting_rows", 0)),
-            wall_s=0.0,
-            chunks_processed=0,
-            chunks_skipped=len(staged),
-        )
-    result = None
-    for chunk in pending:
-        result = append_segment(spark, index_dir, chunk, num_partitions=num_partitions)
-    # lifecycle policy: a long-running drain appends one segment per
-    # micro-batch; bound the segment count (and with it query-probe
-    # fan-out) by folding back to seg=0 past the threshold
-    compacted = maybe_compact(
-        spark, index_dir, max_segments=max_segments, num_partitions=num_partitions
+    return _commit(
+        spark, index_dir, t0=t0, staged_before=staged_before, compact=False,
+        num_partitions=num_partitions, max_segments=max_segments,
     )
-    return compacted if compacted is not None else result

@@ -284,8 +284,8 @@ def test_update_segment_chunk_accounting(spark, tmp_path_factory):
     done_total = len(staged_chunks(spark, d))
     assert res.chunks_processed + res.chunks_skipped == done_total
 
-    # pure replay (same delta again): the empty replay chunk is packed via
-    # the fallback path and MUST count as processed=1, not 0
+    # pure replay (same delta again): the empty replay chunk is still
+    # staged and pending, so it is packed and MUST count as processed=1
     res2 = update_index(spark, delta, d, num_partitions=P, strategy="segment")
     assert res2.chunks_processed == 1
     assert res2.chunks_skipped == done_total  # all prior chunks skipped
@@ -475,6 +475,50 @@ def test_writer_lock_second_thread_conflicts(spark, tmp_path_factory):
         with _writer_lock(d):
             pass
     assert not os.path.exists(os.path.join(d, "_WRITER_LOCK"))
+
+
+def test_update_index_stages_under_writer_lock(spark, tmp_path_factory):
+    """update_index holds the writer lock from picking its chunk id through
+    the commit: while another thread holds the lock it must raise
+    WriterConflict before staging anything — otherwise two concurrent
+    updates pick the same chunk id and the second overwrites the first's
+    staged docs."""
+    import threading
+
+    from statschat_ke_spark.index.build import WriterConflict, _writer_lock
+
+    pdf = generate_documents(120)
+    base = spark.createDataFrame(pdf.iloc[:80], schema=DOCUMENTS_SPARK_SCHEMA).select(
+        "url", "warc_ts", "html", "text", "lang"
+    )
+    delta = spark.createDataFrame(pdf.iloc[80:], schema=DOCUMENTS_SPARK_SCHEMA).select(
+        "url", "warc_ts", "html", "text", "lang"
+    )
+    d = str(tmp_path_factory.mktemp("uplock") / "idx")
+    build_index(spark, base, d, num_partitions=P)
+    staged_dirs = sorted(os.listdir(os.path.join(d, "staged")))
+    n_lineage_files = len(os.listdir(os.path.join(d, "_lineage")))
+
+    entered = threading.Event()
+    release = threading.Event()
+
+    def hold():
+        with _writer_lock(d):
+            entered.set()
+            release.wait(30)
+
+    t = threading.Thread(target=hold)
+    t.start()
+    assert entered.wait(10)
+    try:
+        with pytest.raises(WriterConflict):
+            update_index(spark, delta, d, num_partitions=P, strategy="segment")
+    finally:
+        release.set()
+        t.join(30)
+    assert not t.is_alive()
+    assert sorted(os.listdir(os.path.join(d, "staged"))) == staged_dirs
+    assert len(os.listdir(os.path.join(d, "_lineage"))) == n_lineage_files
 
 
 def test_writer_lock_never_observably_empty(tmp_path_factory):

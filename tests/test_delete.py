@@ -148,6 +148,27 @@ def test_compaction_reclaims_and_stays_identical(spark, corpus, tmp_path_factory
     _assert_same_topk(spark, d1, d2)
 
 
+def test_compaction_refuses_unreadable_stats(spark, corpus, tmp_path_factory):
+    """The tombstone list lives in stats.json: a compaction that cannot read
+    it must raise, not rebuild without the deletes (which would bring the
+    deleted docs back into the top-k for good). The committed marker, which
+    still lists the tombstone, stays in place."""
+    import json
+
+    docs = _docs(spark, corpus.iloc[:120])
+    d = str(tmp_path_factory.mktemp("badstats") / "idx")
+    build_index(spark, docs, d, num_partitions=P)
+    victim = spark.read.parquet(os.path.join(d, "docs")).select("url").first().url
+    res = delete_docs(spark, d, [victim])
+    assert res.n_deleted == 1
+    with open(os.path.join(d, "stats.json"), "w") as f:
+        f.write('{"n_docs": 1')  # torn
+    with pytest.raises(ValueError):
+        merge_index(spark, d, num_partitions=P)
+    with open(os.path.join(d, "_SUCCESS.json")) as f:
+        assert json.load(f)["tombstone_files"] == [res.tombstone_file]
+
+
 def test_delete_then_segment_append(spark, corpus, tmp_path_factory):
     """Delete followed by an incremental segment append: the negative-df
     lexicon delta must survive in the marker's segment list (reserved

@@ -9,7 +9,7 @@ import os
 import pytest
 
 from statschat_ke_spark.corpus import DOCUMENTS_SPARK_SCHEMA, generate_documents
-from statschat_ke_spark.index.build import build_index
+from statschat_ke_spark.index.build import build_index, merge_index
 from statschat_ke_spark.streaming.ingest import ingest_stream
 
 P = 4
@@ -65,12 +65,11 @@ def test_stream_ingest_incremental(spark, parts, tmp_path):
     assert _lexicon(spark, idx_stream) == _lexicon(spark, idx_batch_a)
     assert _postings(spark, idx_stream) == _postings(spark, idx_batch_a)
 
-    # drop 2, compact strategy → drain picks up ONLY the new files and the
-    # full re-merge is byte-identical to a batch build over everything
+    # drop 2 → drain picks up ONLY the new files (appended as a segment);
+    # compacting afterwards is byte-identical to a batch build over everything
     b.write.mode("append").parquet(landing)
-    res2 = ingest_stream(
-        spark, landing, idx_stream, num_partitions=P, strategy="compact"
-    )
+    ingest_stream(spark, landing, idx_stream, num_partitions=P)
+    res2 = merge_index(spark, idx_stream, num_partitions=P)
     build_index(spark, full, idx_batch_full, num_partitions=P)
     assert res2.n_docs == full.filter("lang = 'en'").count()
     assert _lexicon(spark, idx_stream) == _lexicon(spark, idx_batch_full)
